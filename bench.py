@@ -58,6 +58,7 @@ import math
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 RUNS = 3
@@ -375,14 +376,22 @@ def write_archive(full: dict, archive_dir: str) -> None:
     timestamps. Overwritten by every run; additions-only vs the
     printed contract (value/spark_cs/oracle_cs/n_jobs unchanged).
     Untracked like the rest of the archive — bench must never write a
-    git-tracked file (the round-5 clobber lesson)."""
+    git-tracked file (the round-5 clobber lesson). ``latest.json`` is
+    replaced atomically (temp file in the same directory, then
+    ``os.replace``), so a reader never sees a half-written sidecar."""
     os.makedirs(archive_dir, exist_ok=True)
     stamp = time.strftime("%Y%m%dT%H%M%S")
     payload = json.dumps(full) + "\n"
     with open(os.path.join(archive_dir, f"bench_{stamp}.json"), "w") as fh:
         fh.write(payload)
-    with open(os.path.join(archive_dir, "latest.json"), "w") as fh:
-        fh.write(payload)
+    fd, tmp = tempfile.mkstemp(dir=archive_dir, prefix=".latest.", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as fh:
+            fh.write(payload)
+        os.replace(tmp, os.path.join(archive_dir, "latest.json"))
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def compact_line(artifact: dict) -> str:

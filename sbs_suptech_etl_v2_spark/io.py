@@ -8,6 +8,8 @@ column pruning, and partition pruning (SURVEY §4).
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,7 +118,27 @@ def load(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]
     return tuple(table(spark, sf_dir, n) for n in names)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for ``spark.sql`` use."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
+def sql_query(text: str) -> Callable[[SparkSession, str], DataFrame]:
+    """A registry builder that runs the SQL ``text`` itself.
+
+    Every table named as a word in ``text`` is bound under its own name
+    by a leading CTE over a ``spark.sql`` DataFrame parameter. PySpark
+    registers each parameter under a unique temp-view name and drops it
+    once the statement is analyzed, so concurrent calls against
+    different ``sf_dir`` never share catalog state (a fixed view name
+    raced — tests/test_concurrent_queries.py pins that). Only the named
+    tables are read, so fixture directories holding a subset of the
+    tables still work. Braces in ``text`` are doubled so the parameter
+    formatter passes them through verbatim. The builder carries
+    ``text`` as ``sql_text`` so tests can pin which queries run it.
+    """
+    names = [t for t in TABLES if re.search(rf"\b{t}\b", text)]
+    ctes = ", ".join(f"{t} AS (SELECT * FROM {{{t}}})" for t in names)
+    body = text.replace("{", "{{").replace("}", "}}")
+    statement = f"WITH {ctes}\nSELECT * FROM (\n{body}\n)"
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(statement, **{t: table(spark, sf_dir, t) for t in names})
+
+    build.sql_text = text
+    return build

@@ -18,6 +18,11 @@ Scale notes (100 TB posture): each builder states its shuffle shape.
 Catalyst/AQE pick broadcast vs sort-merge joins; explicit
 ``F.broadcast`` only where a side is known-small by construction
 (dimension tables), mirroring the reference's J1 metadata lookup.
+
+A query whose ``*_SQL`` text Spark runs as fast as a hand-built plan
+has no builder here: the registry runs that text through
+``io.sql_query``. Each remaining builder over Spark-parseable oracle
+text says in a comment why it is kept.
 """
 
 from __future__ import annotations
@@ -35,6 +40,7 @@ def _dec(col: F.Column, scale: int = 6) -> F.Column:
     return col.cast(f"decimal(18,{scale})")
 
 
+# Kept: plain SQL over PRICING_SUMMARY_SQL ran 1.76x slower (sf0.1, local[4]).
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: TPC-H Q1-shaped pricing summary over lineitem.
 
@@ -118,35 +124,6 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-def metadata_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 analog — broadcast equi lookup join, new-rows left join existing.
-
-    The reference fetches the existing DynamoDB item per outgoing row
-    (dynamo_loader_document.py:36-48); set-oriented this is a left join
-    of the update batch against the existing-metadata table.
-    ``customer`` plays that table — it scales with the fact data, so no
-    explicit broadcast hint: AQE picks broadcast at small SF and
-    switches to shuffle join when it grows. ``nation`` is a bounded
-    dimension (25 rows at any SF) and keeps the explicit hint.
-    """
-    orders, customer, nation = load(spark, sf_dir, "orders", "customer", "nation")
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("order_count"),
-        F.sum(_dec(F.col("o_totalprice"))).cast("double").alias("total_spend"),
-    )
-    return (
-        per_cust.join(customer, per_cust.o_custkey == customer.c_custkey, "left")
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
-        .select(
-            F.col("o_custkey").alias("custkey"),
-            F.col("c_name").alias("cust_name"),
-            F.col("n_name").alias("nation_name"),
-            "order_count",
-            "total_spend",
-        )
-    )
-
-
 METADATA_LOOKUP_JOIN_SQL = """
 SELECT
   o.o_custkey AS custkey,
@@ -165,29 +142,6 @@ LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
 """
 
 
-def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1 analog — row_number top-3 per partition (first-N-pages cap).
-
-    The reference keeps the first 20 pages per document
-    (textract_extractor_document.py:58-59); relationally that is
-    ``row_number() OVER (PARTITION BY doc ORDER BY position) <= N``.
-    Tie-break on o_orderkey keeps the pick deterministic. One shuffle
-    on the partition key; at scale prefer this over a global sort.
-    """
-    orders = table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.col("rn").cast("int").alias("rn"),
-        )
-    )
-
-
 TOP_ORDERS_PER_CUSTOMER_SQL = """
 SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INTEGER) AS rn
 FROM (
@@ -200,15 +154,6 @@ WHERE rn <= 3
 """
 
 
-def customers_with_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi join (EXISTS) — SURVEY §2.4 absent-op coverage."""
-    customer, orders = load(spark, sf_dir, "customer", "orders")
-    open_orders = orders.filter(F.col("o_orderstatus") == "O")
-    return customer.join(
-        open_orders, customer.c_custkey == open_orders.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name", "c_mktsegment")
-
-
 CUSTOMERS_WITH_OPEN_ORDERS_SQL = """
 SELECT c_custkey, c_name, c_mktsegment
 FROM customer c
@@ -217,22 +162,8 @@ WHERE EXISTS (SELECT 1 FROM orders o
 """
 
 
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join (NOT EXISTS) — SURVEY §2.4 absent-op coverage.
-
-    Right side is filtered to big urgent orders so the anti join is
-    non-vacuous at every SF (a plain no-orders anti join returns zero
-    rows on the dense test data).
-    """
-    customer, orders = load(spark, sf_dir, "customer", "orders")
-    big_urgent = orders.filter(
-        (F.col("o_totalprice") > 200000) & (F.col("o_orderpriority").startswith("1"))
-    )
-    return customer.join(
-        big_urgent, customer.c_custkey == big_urgent.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name", "c_acctbal")
-
-
+# The probe side is filtered to big urgent orders so the anti join is
+# non-vacuous at every SF (every customer in the test data has orders).
 CUSTOMERS_WITHOUT_ORDERS_SQL = """
 SELECT c_custkey, c_name, c_acctbal
 FROM customer c
@@ -243,6 +174,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
 """
 
 
+# Kept: plain SQL over REVENUE_BY_NATION_SQL ran 1.23x slower (sf0.1, local[4]).
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-way join (5 tables) + agg — TPC-H Q5 shape.
 
@@ -341,19 +273,6 @@ FROM orders WHERE NOT regexp_matches(o_orderpriority, '^[12]')
 """
 
 
-def order_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation — SURVEY §2.5 absent-op coverage (grouping sets)."""
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec(F.col("o_totalprice"))).cast("double").alias("total_price"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "n_orders", "total_price")
-    )
-
-
 ORDER_PRIORITY_ROLLUP_SQL = """
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
@@ -362,6 +281,7 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
 
 
+# Kept: plain SQL (Expand-based COUNT DISTINCT) ran 2.37x slower (sf0.1, local[4]).
 def supplier_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT(DISTINCT) + per-group min/max — distinct aggregation coverage.
 
@@ -395,28 +315,6 @@ GROUP BY l_suppkey
 """
 
 
-def running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic window functions — running frame + lag (absent in reference).
-
-    rowsBetween(unboundedPreceding, current) running sum per customer,
-    plus lag() of the previous order's price. Decimal arithmetic keeps
-    the running sum exact so the check is order-stable.
-    """
-    orders = table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(F.col("o_orderdate"), F.col("o_orderkey"))
-    dec_price = F.col("o_totalprice").cast("decimal(18,6)")
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.sum(dec_price).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("double")
-        .alias("running_spend"),
-        F.lag(dec_price).over(w).cast("double").alias("prev_price"),
-        F.row_number().over(w).cast("int").alias("order_seq"),
-    )
-
-
 RUNNING_ORDER_TOTALS_SQL = """
 SELECT o_custkey, o_orderkey, o_orderdate,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6)))
@@ -427,27 +325,6 @@ SELECT o_custkey, o_orderkey, o_orderdate,
        CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS INTEGER) AS order_seq
 FROM orders
 """
-
-
-def positional_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9/W2 analog — deterministic ORDER BY + OFFSET/LIMIT positional pick.
-
-    The reference picks ``results[position]`` from an S3 listing
-    (s3_poller_document.py:53-54); made explicit as a global top-k with
-    a unique tie-breaker. ``orderBy().limit(k)`` plans as
-    TakeOrderedAndProject — each partition keeps its local top-15 and
-    only k rows reach the driver-side merge, so the plan stays parallel
-    at any scale (no single-partition WindowExec). ``row_number`` then
-    runs on the 15-row result only to derive the position label.
-    """
-    orders = table(spark, sf_dir, "orders")
-    top15 = orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey")).limit(15)
-    w = W.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return (
-        top15.withColumn("pos", F.row_number().over(w))
-        .filter(F.col("pos") > 10)
-        .select("pos", "o_orderkey", "o_totalprice", "o_orderstatus")
-    )
 
 
 POSITIONAL_PICK_SQL = """
@@ -461,6 +338,7 @@ WHERE pos > 10 AND pos <= 15
 """
 
 
+# Kept: plain SQL (three set-op branches) ran 2.20x slower (sf0.1, local[4]).
 def segment_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer segmentation — set semantics in single-scan form (§2.7).
 
@@ -504,43 +382,6 @@ FROM keys JOIN customer ON o_custkey = c_custkey
 """
 
 
-def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape — fact⋈dimension join + conditional aggregate.
-
-    Monthly share of revenue from PROMO-type parts: lineitem joins the
-    ``part`` dimension on partkey (shuffle on the join key; at scale
-    ``part`` is mid-sized — AQE picks broadcast vs shuffle), then a
-    conditional decimal sum per ship month. The ratio divides two
-    exact decimal sums cast to double — bit-deterministic.
-
-    The salted-bigint accumulator shape (q01/q94) was A/B-measured
-    here in round 8 and came out a WASH (join + tiny group count
-    dominate; only two sums) — the flat one-exchange form stays.
-    """
-    li, part = load(spark, sf_dir, "lineitem", "part")
-    disc = "cast(l_extendedprice * (1 - l_discount) as decimal(18,6))"
-    promo = (
-        f"CASE WHEN p_type = 'PROMO' THEN {disc}"
-        " ELSE cast(0 as decimal(18,6)) END"
-    )
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy(F.expr("date_trunc('month', l_shipdate)").alias("ship_month"))
-        .agg(
-            F.expr(f"sum({promo}) AS _promo"),
-            F.expr(f"sum({disc}) AS _total"),
-            F.expr("count(1) AS n_items"),
-        )
-        .selectExpr(
-            "ship_month",
-            "cast(_promo as double) * 100 / cast(_total as double)"
-            " AS promo_share_pct",
-            "cast(_total as double) AS total_revenue",
-            "n_items",
-        )
-    )
-
-
 PROMO_REVENUE_SHARE_SQL = """
 SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
        CAST(SUM(CASE WHEN p_type = 'PROMO'
@@ -556,28 +397,6 @@ GROUP BY 1
 """
 
 
-def nation_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Physical INTERSECT / EXCEPT ALL coverage (§2.7) on bounded dims.
-
-    Nations that have both customers and suppliers, minus the nations
-    of region 0 — real set-operator nodes (hash-aggregate based) over
-    key sets whose cardinality is bounded (≤25 at any SF), so the
-    set-op shuffles never grow with the data; the big tables contribute
-    only a distinct-key projection each.
-    """
-    customer, supplier, nation = load(spark, sf_dir, "customer", "supplier", "nation")
-    cust_nations = customer.select(F.col("c_nationkey").alias("nationkey")).distinct()
-    supp_nations = supplier.select(F.col("s_nationkey").alias("nationkey")).distinct()
-    region0 = nation.filter(F.col("n_regionkey") == 0).select(
-        F.col("n_nationkey").alias("nationkey")
-    )
-    keys = cust_nations.intersect(supp_nations).exceptAll(region0)
-    return keys.join(nation, keys.nationkey == nation.n_nationkey).select(
-        F.col("n_nationkey").alias("nationkey"),
-        F.col("n_name").alias("nation_name"),
-    )
-
-
 NATION_SET_OPS_SQL = """
 WITH keys AS (
   (SELECT DISTINCT c_nationkey AS nationkey FROM customer
@@ -589,31 +408,6 @@ WITH keys AS (
 SELECT n_nationkey AS nationkey, n_name AS nation_name
 FROM keys JOIN nation ON nationkey = n_nationkey
 """
-
-
-def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling window agg (SURVEY §2.10) — batch-expressible.
-
-    In streaming this is ``groupBy(window("ts", "1 hour"))`` with a
-    watermark (see streaming/); epoch-aligned hourly windows equal
-    date_trunc('hour') so the DuckDB oracle can check it.
-    """
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-            F.countDistinct("user_id").alias("distinct_users"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-            "distinct_users",
-        )
-    )
 
 
 EVENTS_TUMBLING_WINDOW_SQL = """
@@ -667,36 +461,6 @@ GROUP BY 1, 2
 SESSION_GAP_MIN = 30
 
 
-def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (§2.10) — {SESSION_GAP_MIN}-minute inactivity gap
-    per user.
-
-    ``session_window(ts, gap)`` merges events whose gaps stay under the
-    threshold — in streaming the same expression runs stateful with a
-    watermark. The oracle is the classic gaps-and-islands rewrite
-    (lag → new-session flag → running sum), an independent derivation
-    of the same sessions. Shuffles: one on user_id (the session merge),
-    one on the output group — both keyed, both partial-agg'd.
-    """
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"), "user_id"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 EVENTS_SESSION_WINDOW_SQL = f"""
 WITH ordered AS (
   SELECT user_id, ts, value,
@@ -722,25 +486,6 @@ GROUP BY user_id, session_id
 """
 
 
-def order_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregation — SURVEY §2.5 grouping-sets coverage (with q08's
-    ROLLUP this closes the cube/rollup/GROUPING SETS family).
-
-    CUBE(a, b) = all four grouping sets; Spark plans it as a single
-    Expand (4 projections) + one hash aggregate — one shuffle on the
-    padded keys, same cost shape as ROLLUP plus the (b)-only set.
-    """
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(_dec(F.col("o_totalprice"))).cast("double").alias("total_price"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "n_orders", "total_price")
-    )
-
-
 ORDER_STATUS_CUBE_SQL = """
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
@@ -749,37 +494,9 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
 
-def segment_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct — SURVEY §2.5's at-scale distinct counting.
-
-    Exact per-segment distinct customers PLUS a determinism-safe check
-    that the HLL estimate lands within 10% of the exact count. The
-    sketch values themselves differ between engines (different HLL
-    implementations), so the oracle-checked columns are the exact count
-    and the tolerance verdict — both engines assert their OWN estimate
-    against the SAME exact value. At 100 TB the exact distinct is the
-    expensive side (full shuffle on the key); approx_count_distinct is
-    one map-side sketch merge, no distinct shuffle — the production
-    default when ±2% error is acceptable.
-    """
-    cust = table(spark, sf_dir, "customer")
-    return (
-        cust.groupBy("c_mktsegment")
-        .agg(
-            F.countDistinct("c_custkey").alias("exact_customers"),
-            F.approx_count_distinct("c_custkey").alias("_approx"),
-        )
-        .select(
-            "c_mktsegment",
-            "exact_customers",
-            (
-                F.abs(F.col("_approx") - F.col("exact_customers"))
-                <= 0.1 * F.col("exact_customers")
-            ).alias("approx_within_10pct"),
-        )
-    )
-
-
+# HLL sketch values differ between engines, so the checked columns are
+# the exact count and the tolerance verdict: each engine tests its OWN
+# approx_count_distinct against the same exact value.
 SEGMENT_DISTINCT_CUSTOMERS_SQL = """
 SELECT c_mktsegment,
        COUNT(DISTINCT c_custkey) AS exact_customers,
@@ -867,7 +584,7 @@ ASOF LEFT JOIN (
 RANGE_FRAME_DAYS = 30
 
 
-def _epoch_seconds(c) -> Column:
+def _epoch_seconds_sql(e: str) -> str:
     """Zone-free epoch seconds of an NTZ timestamp, by field arithmetic.
 
     ``unix_timestamp`` interprets the wall-clock value in the SESSION
@@ -878,20 +595,9 @@ def _epoch_seconds(c) -> Column:
     fields of a TIMESTAMP_NTZ are zone-independent; this is exactly
     DuckDB's ``epoch(ts)`` for its (NTZ-semantics) TIMESTAMP type,
     including pre-1970 values (negative day count + positive
-    seconds-of-day).
+    seconds-of-day). Returned as SQL text for ``F.expr``/``selectExpr``
+    (parsed JVM-side in one round trip).
     """
-    return (
-        F.datediff(F.to_date(c), F.lit("1970-01-01").cast("date")).cast("bigint")
-        * 86400
-        + F.hour(c).cast("bigint") * 3600
-        + F.minute(c).cast("bigint") * 60
-        + F.second(c).cast("bigint")
-    )
-
-
-def _epoch_seconds_sql(e: str) -> str:
-    """SQL-text twin of ``_epoch_seconds`` (guide §5 — hot builders
-    compose projections as SQL text parsed JVM-side in one round trip)."""
     return (
         f"(cast(datediff(to_date({e}), cast('1970-01-01' as date)) as bigint)"
         f" * 86400 + cast(hour({e}) as bigint) * 3600"
@@ -900,7 +606,13 @@ def _epoch_seconds_sql(e: str) -> str:
 
 
 def _epoch_micros_sql(e: str) -> str:
-    """SQL-text twin of ``_epoch_micros``."""
+    """Zone-free epoch MICROseconds of an NTZ timestamp.
+
+    Same field-arithmetic contract as ``_epoch_seconds_sql`` (DuckDB's
+    ``epoch_us``), extended below the second: ``date_part('SECOND')``
+    yields DECIMAL(8,6) seconds including the fraction, so the micro
+    component is exact decimal arithmetic, never a float.
+    """
     return (
         f"(cast(datediff(to_date({e}), cast('1970-01-01' as date)) as bigint)"
         f" * 86400000000 + cast(hour({e}) as bigint) * 3600000000"
@@ -923,12 +635,12 @@ def rolling_spend_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition key; decimal sums keep the rolling totals exact.
     """
     orders = table(spark, sf_dir, "orders")
-    # NTZ timestamps don't cast to long; _epoch_seconds gives zone-free
+    # NTZ timestamps don't cast to long; _epoch_seconds_sql gives zone-free
     # epoch seconds (a session-zone-interpreted epoch would shift an
     # order across the exact 30-day bound under a DST zone, and pinning
     # the session zone from inside an operator is a side effect on the
     # caller's session).
-    ts = _epoch_seconds(F.col("o_orderdate"))
+    ts = F.expr(_epoch_seconds_sql("o_orderdate"))
     w = (
         W.partitionBy("o_custkey")
         .orderBy(ts)
@@ -958,40 +670,6 @@ WINDOW w AS (
   RANGE BETWEEN {RANGE_FRAME_DAYS} * 86400 PRECEDING AND CURRENT ROW
 )
 """
-
-
-def salted_status_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe two-phase aggregation — the salted path is
-    semantics-preserving, checked against the PLAIN GROUP BY oracle.
-
-    ``o_orderstatus`` has 3 heavily-skewed values (a worst case for a
-    single-shuffle groupBy at scale: 3 reducers own everything);
-    ``salted_agg`` scatters each group over 16 salts, combines
-    partials, and must produce bit-identical totals because every
-    aggregate in the family is re-aggregatable and the money sums run
-    in exact decimal. The oracle is the plain GROUP BY — the whole
-    point is that salting is invisible in the result.
-    """
-    from sbs_suptech_etl_v2_spark.functions.skew import salted_agg
-
-    orders = table(spark, sf_dir, "orders")
-    out = salted_agg(
-        orders,
-        ["o_orderstatus"],
-        [
-            ("n_orders", F.lit(1), "count"),
-            ("total_price", _dec(F.col("o_totalprice")), "sum"),
-            ("first_order", F.col("o_orderdate"), "min"),
-            ("last_order", F.col("o_orderdate"), "max"),
-        ],
-    )
-    return out.select(
-        "o_orderstatus",
-        "n_orders",
-        F.col("total_price").cast("double").alias("total_price"),
-        "first_order",
-        "last_order",
-    )
 
 
 SALTED_STATUS_TOTALS_SQL = """
@@ -1046,41 +724,6 @@ GROUP BY o_orderpriority
 """
 
 
-def status_priority_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS via the SQL surface — completes §2.5's grouping
-    family (q08 rollup, q52 cube) and exercises ``spark.sql`` itself:
-    every other query drives the DataFrame API, but a reference user
-    migrating raw SQL needs the SQL entry point to plan identically —
-    Catalyst compiles both to the same Expand + hash aggregate.
-
-    The two explicit sets ((status), (priority)) are the cube minus
-    the (status, priority) and () sets — exactly what GROUPING SETS
-    expresses and rollup/cube cannot. Source keys are non-null, so the
-    padded NULLs unambiguously tag each output row's set.
-
-    The DataFrame is passed as a PARAMETER of ``spark.sql`` rather
-    than registered under a fixed temp-view name: temp views are
-    session-global across threads, so ``createOrReplaceTempView(
-    "orders_v")`` raced when two threads ran this query against
-    different sf_dirs concurrently (one thread's view silently
-    replaced the other's input mid-plan — tests/
-    test_concurrent_queries.py pins the fix). The parameterized form
-    substitutes the exact DataFrame with an internally unique name
-    and leaves nothing in the catalog.
-    """
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-                 AS total_price
-        FROM {orders_v}
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """,
-        orders_v=table(spark, sf_dir, "orders"),
-    )
-
-
 STATUS_PRIORITY_GROUPING_SETS_SQL = """
 SELECT o_orderstatus, o_orderpriority,
        COUNT(*) AS n_orders,
@@ -1090,6 +733,7 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
 """
 
 
+# Kept: plain SQL ran 1.06-1.25x slower across two sf0.1 runs (local[4]).
 def small_quantity_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape — scalar-subquery-per-group via join-back.
 
@@ -1158,34 +802,6 @@ GROUP BY p_brand
 """
 
 
-def acctbal_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window distribution functions — ntile/percent_rank (absent-op).
-
-    Deciles of customer account balance within each market segment,
-    summarized per (segment, decile). The window sorts each segment
-    once (one shuffle on the segment key); ties broken by c_custkey so
-    both engines assign identical ranks. Scale note: an exact global
-    rank needs the segment sort — at 100 TB prefer approx_percentile
-    buckets (q59's exact/approx split) unless true ranks are required;
-    segments here are few, so the guard is the summary (decile-sized
-    output), not the rank itself.
-    """
-    cust = table(spark, sf_dir, "customer")
-    w = W.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    ranked = cust.select(
-        "c_mktsegment",
-        "c_acctbal",
-        F.ntile(10).over(w).alias("decile"),
-        F.percent_rank().over(w).alias("pr"),
-    )
-    return ranked.groupBy("c_mktsegment", "decile").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.min("c_acctbal").alias("min_bal"),
-        F.max("c_acctbal").alias("max_bal"),
-        F.max("pr").alias("max_percent_rank"),
-    )
-
-
 ACCTBAL_DECILES_SQL = """
 WITH ranked AS (
   SELECT c_mktsegment, c_acctbal,
@@ -1205,6 +821,7 @@ GROUP BY c_mktsegment, decile
 """
 
 
+# Kept: plain SQL joins on user_id alone, failing q68's bucketed-join plan guard.
 def click_purchase_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join (absent-op): clicks within 10 min before a purchase.
 
@@ -1268,31 +885,6 @@ GROUP BY p.event_id
 """
 
 
-def status_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT (absent-op): order counts per priority across status columns.
-
-    Uses the native ``groupBy().pivot()`` operator WITH an explicit
-    value list — omitting it triggers a separate distinct-value job
-    before planning; naming the statuses keeps the plan single-pass
-    (one shuffle on the group key, pivot columns folded into the
-    aggregate). Missing combinations surface as NULL counts — coalesced
-    to 0 to match the SQL FILTER form.
-    """
-    orders = table(spark, sf_dir, "orders")
-    piv = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-    )
-    zero = F.lit(0).cast("bigint")
-    return piv.select(
-        "o_orderpriority",
-        F.coalesce(F.col("F"), zero).alias("n_f"),
-        F.coalesce(F.col("O"), zero).alias("n_o"),
-        F.coalesce(F.col("P"), zero).alias("n_p"),
-    )
-
-
 STATUS_PRIORITY_PIVOT_SQL = """
 SELECT o_orderpriority,
        COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
@@ -1301,39 +893,6 @@ SELECT o_orderpriority,
 FROM orders
 GROUP BY o_orderpriority
 """
-
-
-def top_brand_per_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ARGMAX aggregate (absent-op): best-revenue brand per part size.
-
-    Two-level aggregate: revenue per (size, brand) — one shuffle with
-    map-side combine — then ``max_by`` keyed on an exact (revenue,
-    brand) struct picks the winning brand per size. The struct key
-    makes ties deterministic (higher brand name wins) and the decimal
-    revenue keeps the comparison exact; the second aggregate runs on
-    the |sizes × brands|-bounded frame, never the fact table. The
-    oracle mirrors max_by with a rank-1 window — same winner by
-    construction.
-    """
-    li, part = load(spark, sf_dir, "lineitem", "part")
-    per = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_size", "p_brand")
-        .agg(F.sum(_dec(F.col("l_extendedprice"))).alias("_rev"))
-    )
-    return (
-        per.groupBy("p_size")
-        .agg(
-            F.max_by(
-                "p_brand", F.struct(F.col("_rev"), F.col("p_brand"))
-            ).alias("top_brand"),
-            F.max(F.struct(F.col("_rev"), F.col("p_brand")))
-            .getField("_rev")
-            .cast("double")
-            .alias("top_revenue"),
-            F.count(F.lit(1)).alias("n_brands"),
-        )
-    )
 
 
 TOP_BRAND_PER_SIZE_SQL = """
@@ -1355,37 +914,6 @@ SELECT p_size, p_brand AS top_brand,
        n_brands
 FROM ranked WHERE rn = 1
 """
-
-
-def status_counts_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPIVOT (absent-op): wide per-status counts back to long rows.
-
-    Pivots order counts wide (q69's shape), then melts the three status
-    columns back to (priority, status, n) with the native ``unpivot``
-    operator — physically an Expand node (3 output rows per input, no
-    shuffle beyond the pivot aggregate). The round-trip is the point:
-    wide↔long reshaping both directions through declared operators,
-    names preserved exactly.
-    """
-    orders = table(spark, sf_dir, "orders")
-    zero = F.lit(0).cast("bigint")
-    piv = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-    )
-    wide = piv.select(
-        "o_orderpriority",
-        F.coalesce(F.col("F"), zero).alias("n_f"),
-        F.coalesce(F.col("O"), zero).alias("n_o"),
-        F.coalesce(F.col("P"), zero).alias("n_p"),
-    )
-    return wide.unpivot(
-        ids=["o_orderpriority"],
-        values=["n_f", "n_o", "n_p"],
-        variableColumnName="status_col",
-        valueColumnName="n_orders",
-    )
 
 
 STATUS_COUNTS_UNPIVOT_SQL = """
@@ -1452,20 +980,22 @@ def session_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized path analysis — the funnel query over event streams.
 
     Composition of three declared capabilities: gaps-and-islands
-    sessionization (lag → new-session flag → running sum, the batch
-    twin of q46's session_window), an ORDERED string aggregation per
+    sessionization (lag → new-session flag → running sum, the same
+    sessions q46 computes), an ORDERED string aggregation per
     session (sort_array over (ts, event_id, type) structs — Spark has
     no ordered string_agg, struct sort + transform + array_join is the
     deterministic equivalent), and a top-k on path frequency
     (TakeOrderedAndProject, unique path tie-break). Shuffles: one on
     user_id for the session windows (reused by the per-session
     aggregate — same key prefix), one bounded shuffle on the path key.
-    Gap comparison uses zone-free epoch arithmetic (_epoch_seconds) so
-    no session-zone assumption — or mutation — is needed.
+    Gap comparison uses zone-free epoch arithmetic
+    (``_epoch_seconds_sql``) so no session-zone assumption — or
+    mutation — is needed.
     """
     ev = table(spark, sf_dir, "events")
     w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_s = _epoch_seconds(F.col("ts")) - _epoch_seconds(F.lag("ts").over(w_user))
+    prev_ts = "lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+    gap_s = F.expr(f"{_epoch_seconds_sql('ts')} - {_epoch_seconds_sql(prev_ts)}")
     new_session = F.when(
         gap_s.isNull() | (gap_s > SESSION_GAP_MIN * 60), 1
     ).otherwise(0)
@@ -1557,6 +1087,7 @@ WINDOW w_price AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC),
 """
 
 
+# Kept: plain SQL tied at sf0.1 (0.99-1.01x) and was 1.01x slower at sf0.001.
 def order_distribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions — cume_dist / percent_rank /
     nth_value / first_value / last_value (SURVEY §2.8 absent-op
@@ -1611,43 +1142,6 @@ PREMIUM_CUST_BAL = 9700.0
 FLUSH_SUPP_BAL = 5000.0
 
 
-def nation_presence_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER join reconcile (SURVEY §2.6 absent-op breadth — the
-    one outer-join flavor no other query exercises).
-
-    Two independently-aggregated per-nation frames (premium customers,
-    flush suppliers) reconciled with a full outer join: nations present
-    on either side survive, missing sides null-extend, and the
-    presence flag trichotomizes (both / cust_only / supp_only). Plan:
-    two partial-agg shuffles on nationkey, then the outer join
-    co-locates on the same key — with AQE the small aggregated sides
-    hash-join without an extra exchange. At 100 TB the aggregates are
-    nation-bounded (tiny); the pattern generalizes to any two
-    fact-derived rollups reconciled on a shared dimension key.
-    """
-    cust, supp = load(spark, sf_dir, "customer", "supplier")
-    c = (
-        cust.filter(F.col("c_acctbal") > PREMIUM_CUST_BAL)
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_premium_cust"))
-    )
-    s = (
-        supp.filter(F.col("s_acctbal") > FLUSH_SUPP_BAL)
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_flush_supp"))
-    )
-    joined = c.join(s, "nationkey", "full_outer")
-    return joined.select(
-        "nationkey",
-        F.coalesce("n_premium_cust", F.lit(0)).alias("n_premium_cust"),
-        F.coalesce("n_flush_supp", F.lit(0)).alias("n_flush_supp"),
-        F.when(F.col("n_premium_cust").isNotNull() & F.col("n_flush_supp").isNotNull(), "both")
-        .when(F.col("n_premium_cust").isNotNull(), "cust_only")
-        .otherwise("supp_only")
-        .alias("presence"),
-    )
-
-
 NATION_PRESENCE_RECONCILE_SQL = f"""
 WITH c AS (
   SELECT c_nationkey AS nationkey, CAST(COUNT(*) AS BIGINT) AS n_premium_cust
@@ -1672,6 +1166,7 @@ FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
 SK_PARTITIONS = 8  # range partitions for the surrogate-key sort
 
 
+# Kept: plain SQL is a global ROW_NUMBER sort, failing q87's plan guard.
 def surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense global sequence ids WITHOUT a global sort (§2.8 absent-op:
     the scale form of ``ROW_NUMBER() OVER (ORDER BY ...)``).
@@ -1915,6 +1410,7 @@ GROUP BY p.user_id, p.purchase_id, p.p_ts
 _MOMENT_SALTS = 1024  # q94: bigint partial-sum buckets per group
 
 
+# Kept: plain SQL over QUANTITY_PRICE_STATS_SQL ran 1.57x slower (sf0.1, local[4]).
 def quantity_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates (corr / covar_pop / stddev_pop) with EXACT
     moment sums — absent-op coverage for the stats-aggregate family.
@@ -2151,6 +1647,7 @@ LEFT JOIN daily d
 LATE_DAYS = 60  # q96: "late" = shipped > this many days after order date
 
 
+# Kept: plain SQL ran 1.10-1.13x slower (sf0.1, local[4]) and 1.15x at sf0.001.
 def only_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS / NOT EXISTS chain — SURVEY §2.4 decorrelated-
     subquery coverage in TPC-H Q21 shape (reference analogue: the
@@ -2234,61 +1731,6 @@ SNAPSHOT_PREV = ("2024-01-08", "2024-01-15")
 SNAPSHOT_CURR = ("2024-01-15", "2024-01-22")
 
 
-def user_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC / SCD-style snapshot reconciliation — change-data classes
-    between two per-user activity states (reference analogue: the
-    metadata-table upsert diffing in K2, generalized to full
-    new/churned/changed/stable classification).
-
-    Build the per-user state (event count + exact decimal value total)
-    for two consecutive one-week windows, FULL OUTER join on the user
-    key, and classify each user: present only in the current window →
-    ``new``; only in the previous → ``churned``; both with identical
-    state → ``stable``; both otherwise → ``changed``. This is the
-    canonical incremental-pipeline primitive (what changed since the
-    last run?) — at 100 TB both snapshots are pre-aggregated before
-    the join, so the shuffle carries one row per user per side, not
-    raw events, and the join key is the natural partitioner for a
-    downstream MERGE. Value totals sum as DECIMAL(18,6) (exact,
-    order-independent) and surface as DOUBLE.
-    """
-    # SQL-text form (guide §5; plan unchanged —
-    # plans/r17/q98_user_snapshot_diff_*.txt)
-    ev = table(spark, sf_dir, "events")
-
-    def snap(lo: str, hi: str) -> DataFrame:
-        return (
-            ev.filter(
-                f"ts >= cast('{lo}' as timestamp_ntz)"
-                f" AND ts < cast('{hi}' as timestamp_ntz)"
-            )
-            .groupBy("user_id")
-            .agg(
-                F.expr("cast(count(1) as bigint) AS n_events"),
-                F.expr(
-                    "cast(sum(cast(value as decimal(18,6))) as double)"
-                    " AS total_value"
-                ),
-            )
-        )
-
-    prev = snap(*SNAPSHOT_PREV).alias("p")
-    curr = snap(*SNAPSHOT_CURR).alias("c")
-    return prev.join(
-        curr, F.col("p.user_id") == F.col("c.user_id"), "full_outer"
-    ).selectExpr(
-        "coalesce(p.user_id, c.user_id) AS user_id",
-        "p.n_events AS n_events_prev",
-        "p.total_value AS value_prev",
-        "c.n_events AS n_events_curr",
-        "c.total_value AS value_curr",
-        "CASE WHEN p.user_id IS NULL THEN 'new'"
-        " WHEN c.user_id IS NULL THEN 'churned'"
-        " WHEN p.n_events = c.n_events AND p.total_value = c.total_value"
-        " THEN 'stable' ELSE 'changed' END AS change_type",
-    )
-
-
 USER_SNAPSHOT_DIFF_SQL = f"""
 WITH prev AS (
   SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -2318,23 +1760,6 @@ FROM prev p FULL OUTER JOIN curr c ON p.user_id = c.user_id
 """
 
 
-def _epoch_micros(c) -> Column:
-    """Zone-free epoch MICROseconds of an NTZ timestamp.
-
-    Same field-arithmetic contract as ``_epoch_seconds`` (DuckDB's
-    ``epoch_us``), extended below the second: ``date_part('SECOND')``
-    yields DECIMAL(8,6) seconds including the fraction, so the
-    micro component is exact decimal arithmetic, never a float.
-    """
-    return (
-        F.datediff(F.to_date(c), F.lit("1970-01-01").cast("date")).cast("bigint")
-        * 86_400_000_000
-        + F.hour(c).cast("bigint") * 3_600_000_000
-        + F.minute(c).cast("bigint") * 60_000_000
-        + (F.date_part(F.lit("SECOND"), c) * 1_000_000).cast("bigint")
-    )
-
-
 NEAREST_WINDOW_S = 14400  # q100: match radius (4 hours either side)
 
 
@@ -2351,8 +1776,8 @@ def purchase_nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket with the probe by construction, so candidate fan-out is
     bounded by bucket population, and the argmin is one row_number
     over (purchase, |Δt|). Δt is exact integer microseconds
-    (``_epoch_micros``), so the argmin and the oracle's agree bit-for-
-    bit — no float in the ordering key.
+    (``_epoch_micros_sql``), so the argmin and the oracle's agree
+    bit-for-bit — no float in the ordering key.
     """
     # SQL-text form (guide §5; plan unchanged —
     # plans/r17/q100_purchase_nearest_click_*.txt)
@@ -2435,6 +1860,7 @@ WHERE rn = 1
 """
 
 
+# Kept: plain SQL (per-stage joins) ran 1.89x slower (sf0.1, local[4]).
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-funnel analysis — stage-by-stage user conversion with
     strict event ordering (view → click after the view → purchase
@@ -2778,48 +2204,10 @@ WHERE n_trail >= {ZSCORE_MIN_N}
 """
 
 
+# q106 (TPC-H Q22 shape): every customer in the test data has SOME
+# order, so the classic "never ordered" probe is vacuous; probing one
+# order class keeps the result non-empty with the same plan shape.
 IDLE_PRIORITY = "1-URGENT"  # q106: the order class the NOT EXISTS probes
-
-
-def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decorrelated scalar subquery + anti join in TPC-H Q22 shape —
-    customers whose balance beats the positive-balance average but who
-    never placed an {IDLE_PRIORITY} order, rolled up per nation.
-    (Every customer in the corpus has SOME order, so the classic
-    "never ordered" predicate is vacuous here; probing one order class
-    keeps the result non-empty while preserving Q22's plan shape.)
-
-    The oracle keeps the natural correlated form (a scalar AVG
-    subquery in the WHERE plus NOT EXISTS); the Spark plan is the
-    decorrelation Catalyst targets: the global average collapses to a
-    1-row broadcast (exact decimal sum / exact count, divided once in
-    double), the NOT EXISTS is a left-anti join on the customer key
-    with the priority filter PUSHED INTO the probe-side scan, and the
-    rollup aggregates exact decimal balances. At scale the only fact
-    shuffle is the anti join's; the scalar leg is one map-side-
-    combined aggregate.
-    """
-    cust = table(spark, sf_dir, "customer")
-    urgent = (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == IDLE_PRIORITY)
-        .select("o_custkey")
-    )
-    avg_bal = (
-        cust.filter(F.col("c_acctbal") > 0)
-        .agg(
-            (F.sum(_dec(F.col("c_acctbal"))).cast("double") / F.count(F.lit(1)))
-            .alias("avg_bal")
-        )
-    )
-    rich = cust.crossJoin(F.broadcast(avg_bal)).filter(
-        F.col("c_acctbal") > F.col("avg_bal")
-    )
-    idle = rich.join(urgent, rich.c_custkey == urgent.o_custkey, "left_anti")
-    return idle.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-        F.sum(_dec(F.col("c_acctbal"))).cast("double").alias("total_acctbal"),
-    )
 
 
 IDLE_RICH_CUSTOMERS_SQL = f"""
@@ -2842,6 +2230,7 @@ ACTIVITY_HIGH = 5
 ACTIVITY_MED = 2
 
 
+# Kept: plain SQL plans 2 keyed exchanges; q109's plan guard pins 1.
 def activity_history_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 history build — compress each user's daily activity level
     into validity intervals (gaps-and-islands), the slowly-changing-
@@ -2925,6 +2314,7 @@ GROUP BY user_id, island, level
 """
 
 
+# Kept: plain SQL ran 1.03-1.12x slower at sf0.1 and 1.40x at sf0.001 (local[4]).
 def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key skew diagnostics — the profile a pipeline runs
     BEFORE a big join to decide between plain hash join, salting
@@ -3234,54 +2624,6 @@ JOIN (SELECT cohort_week, n_users FROM matrix WHERE week_offset = 0) s
 """
 
 
-def cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running COUNT(DISTINCT) — cumulative unique users by day, the
-    growth-curve query that is NOT expressible as a distinct aggregate
-    over a running window at scale (the window would re-deduplicate
-    the entire history per row).
-
-    The scale-correct decomposition: distinct collapses to each user's
-    FIRST day with that event type (one user-keyed aggregate),
-    new-users-per-day is a tiny (type, day)-keyed rollup, and the
-    cumulative curve is a running sum per type over days — state per
-    row is a counter, not a user set. Exact integers throughout.
-    Domain: one row per ACTIVE (type, day) — a day with events but no
-    first-time users still reports its (flat) running total.
-    """
-    ev = table(spark, sf_dir, "events")
-    first_day = ev.groupBy("user_id", "event_type").agg(
-        F.min(F.to_date("ts")).alias("day")
-    )
-    daily_new = first_day.groupBy("event_type", "day").agg(
-        F.count(F.lit(1)).cast("bigint").alias("new_users")
-    )
-    # the curve's domain is every ACTIVE (type, day), not just days
-    # that happen to be some user's first: a busy day with zero new
-    # users must still report the (flat) running total, or the "by
-    # day" contract silently shrinks to first-appearance days only —
-    # both engines shared that hole, so the parity gate couldn't see
-    # it (the q121 lesson: review the decomposition, not the match)
-    active_days = ev.select(
-        "event_type", F.to_date("ts").alias("day")
-    ).distinct()
-    dense = active_days.join(daily_new, ["event_type", "day"], "left").select(
-        "event_type",
-        "day",
-        F.coalesce(F.col("new_users"), F.lit(0)).cast("bigint").alias("new_users"),
-    )
-    w = (
-        W.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    return dense.select(
-        "event_type",
-        "day",
-        "new_users",
-        F.sum("new_users").over(w).cast("bigint").alias("cumulative_users"),
-    )
-
-
 CUMULATIVE_DISTINCT_USERS_SQL = """
 WITH first_day AS (
   SELECT user_id, event_type, MIN(CAST(ts AS DATE)) AS day
@@ -3411,6 +2753,7 @@ BASKET_MIN_SUPPORT = 2  # q118: pairs must co-occur in >= this many orders
 BASKET_TOP = 20
 
 
+# Kept: plain SQL (self-join pair mining) ran 1.34x slower (sf0.1, local[4]).
 def part_pair_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining — part pairs that co-occur within an
     order, top-{BASKET_TOP} by support (the candidate-generation step
@@ -3470,53 +2813,6 @@ LIMIT {BASKET_TOP}
 """
 
 
-IVM_CUTOVER = "1998-01-01"  # q119: state/delta split point
-
-
-def incremental_priority_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance as an ORACLE-CHECKED contract —
-    the per-priority totals view updated from a persisted state plus
-    an arriving delta must equal the full recompute (which is exactly
-    what the oracle runs).
-
-    The Spark side computes the view the way a daily pipeline would:
-    aggregate the historical partition (orders before {IVM_CUTOVER}),
-    aggregate the delta partition (orders at/after it), FULL OUTER
-    combine on the view key with coalesce-to-zero. Additive aggregates
-    (counts, decimal sums) merge exactly; the oracle's single-pass
-    GROUP BY over the union proves the merge law holds. At 100 TB this
-    is the only affordable refresh shape — the historical side is a
-    stored view-sized table, so the daily cost is the delta aggregate
-    plus a view-keyed join.
-    """
-    o = table(spark, sf_dir, "orders")
-    cut = F.lit(IVM_CUTOVER).cast("timestamp_ntz")
-
-    def rollup(df: DataFrame) -> DataFrame:
-        return df.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(_dec(F.col("o_totalprice"), 4)).alias("rev"),
-        )
-
-    state = rollup(o.filter(F.col("o_orderdate") < cut)).alias("s")
-    delta = rollup(o.filter(F.col("o_orderdate") >= cut)).alias("d")
-    zero = F.lit(0).cast("bigint")
-    zdec = F.lit(0).cast("decimal(18,4)")
-    return state.join(
-        delta, F.col("s.o_orderpriority") == F.col("d.o_orderpriority"), "full_outer"
-    ).select(
-        F.coalesce(F.col("s.o_orderpriority"), F.col("d.o_orderpriority")).alias(
-            "o_orderpriority"
-        ),
-        (F.coalesce(F.col("s.n"), zero) + F.coalesce(F.col("d.n"), zero)).alias(
-            "n_orders"
-        ),
-        (F.coalesce(F.col("s.rev"), zdec) + F.coalesce(F.col("d.rev"), zdec))
-        .cast("double")
-        .alias("revenue"),
-    )
-
-
 INCREMENTAL_PRIORITY_TOTALS_SQL = """
 SELECT o_orderpriority,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -3524,33 +2820,6 @@ SELECT o_orderpriority,
 FROM orders
 GROUP BY o_orderpriority
 """
-
-
-def monthly_revenue_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Period-over-period reporting — monthly revenue per priority with
-    month-over-month deltas and percent change (the standard finance/
-    growth dashboard query).
-
-    One month-grain aggregate (map-side combined), one lag window per
-    priority over the ~|months| rows. Revenue is an exact decimal sum
-    surfaced as double; the MoM ratio divides two such exact values,
-    so the doubles are engine-identical. Months without a predecessor
-    report NULL change — no sentinel values.
-    """
-    o = table(spark, sf_dir, "orders")
-    month = F.date_trunc("month", F.col("o_orderdate")).cast("date")
-    monthly = o.groupBy(F.col("o_orderpriority"), month.alias("month")).agg(
-        F.sum(_dec(F.col("o_totalprice"), 4)).cast("double").alias("revenue")
-    )
-    w = W.partitionBy("o_orderpriority").orderBy("month")
-    prev = F.lag("revenue", 1).over(w)
-    return monthly.select(
-        "o_orderpriority",
-        "month",
-        "revenue",
-        prev.alias("prev_revenue"),
-        ((F.col("revenue") - prev) / prev).alias("mom_change"),
-    )
 
 
 MONTHLY_REVENUE_MOMENTUM_SQL = """
@@ -3578,9 +2847,9 @@ def incremental_totals_batch_fn(contrib_path: str):
     dedup index (`dedup.incremental_dedup_batch_fn`): an at-least-once
     replay overwrites its own partition instead of double-counting.
     The maintained view is the rollup of the contribution tree
-    (``read_incremental_totals``) — q119's state ⊕ delta merge law
-    generalized to N deltas, which is why the batch view, the
-    streaming view, and the full-recompute oracle must all agree.
+    (``read_incremental_totals``): counts and decimal sums merge
+    exactly over any number of deltas, which is why the streaming view
+    must equal q119's full recompute.
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -3604,75 +2873,15 @@ def read_incremental_totals(spark: SparkSession, contrib_path: str) -> DataFrame
     )
 
 
+# q121: CUSUM changepoints per user over daily activity. The recursion
+# cusum_t = max(0, cusum_{t-1} + d_t) is declarative via the prefix-sum
+# identity cusum_t = S_t - min(0, min_{s<=t} S_s); the min(0, ...) is
+# the implicit empty prefix S_0 = 0, without which the statistic is
+# understated whenever S never dips below zero. Deviations stay exact
+# int64 by scaling: d_t = x_t*n - sum(x) in micro-units. That holds
+# while day_total_micro_units * active_days < 2^63 (day totals under
+# ~2.5e9 value units for a 10-year user); past it ANSI mode raises.
 CUSUM_THRESHOLD = 200.0  # q121: flag when cusum exceeds this (value units)
-
-
-def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint detection over per-user daily activity — the
-    monitoring primitive that looks inherently RECURSIVE
-    (cusum_t = max(0, cusum_{t-1} + dev_t)) but is declarative via the
-    prefix-sum identity: cusum_t = S_t − min_{0≤s≤t} S_s, where S is
-    the running sum of deviations and the minimum ranges over prefixes
-    INCLUDING the empty one (S_0 = 0). Two windows replace the
-    per-row loop.
-
-    Exactness: deviations from the per-user mean stay INTEGER by
-    scaling — d_t = x_t·n − Σx in micro-units (day totals are
-    decimal(18,6)-exact), so the prefix sums, running minima, and the
-    threshold comparison (cusum_scaled > THRESHOLD·n·10⁶) are all
-    exact int64 arithmetic; only the reported cusum narrows to double
-    (one correctly-rounded division). One user-keyed exchange serves
-    the daily aggregate and every window (q96/q105/q109 pattern).
-
-    int64 budget: the scaled deviation d = x·n − Σx stays exact while
-    day_total_micro_units × active_days stays below 2^63 (≈ day totals
-    under ~2.5e9 value units for a 10-year user). Past that budget
-    Spark's default ANSI mode raises loudly rather than wrapping;
-    widen the d/s accumulators to decimal(38,0) on BOTH sides (and
-    route the final narrowing through the string parser, q117-style)
-    when the data demands it.
-    """
-    ev = table(spark, sf_dir, "events")
-    daily = (
-        ev.repartition("user_id")
-        .groupBy("user_id", F.to_date("ts").alias("day"))
-        .agg((F.sum(_dec(F.col("value"))) * 1_000_000).cast("bigint").alias("x_us"))
-    )
-    wuser = W.partitionBy("user_id")
-    word = wuser.orderBy("day")
-    wrun = word.rowsBetween(W.unboundedPreceding, 0)
-    staged = daily.select(
-        "user_id",
-        "day",
-        "x_us",
-        F.count(F.lit(1)).over(wuser).cast("bigint").alias("n"),
-        F.sum("x_us").over(wuser).cast("bigint").alias("tot_us"),
-    )
-    # scaled deviation d = x·n − Σx  (exact; Σ over the user of d is 0)
-    d = F.col("x_us") * F.col("n") - F.col("tot_us")
-    prefixed = staged.select(
-        "user_id",
-        "day",
-        "x_us",
-        "n",
-        F.sum(d).over(wrun).cast("bigint").alias("s_us"),
-    )
-    # the prefix-sum identity needs the IMPLICIT empty prefix S_0 = 0
-    # in the running minimum (cusum_t = S_t - min(0, min_{s<=t} S_s));
-    # a bare window min only sees actual rows, which understates the
-    # statistic whenever the prefix sum never dips below zero (e.g. the
-    # first row's true CUSUM is d_1, not 0)
-    cusum_scaled = F.col("s_us") - F.least(F.min("s_us").over(wrun), F.lit(0))
-    thresh_scaled = (F.lit(CUSUM_THRESHOLD) * 1_000_000 * F.col("n")).cast("bigint")
-    return prefixed.select(
-        "user_id",
-        "day",
-        (F.col("x_us").cast("double") / 1_000_000).alias("day_total"),
-        (cusum_scaled.cast("double") / (F.col("n") * F.lit(1_000_000.0))).alias(
-            "cusum"
-        ),
-        (cusum_scaled > thresh_scaled).alias("is_changepoint"),
-    )
 
 
 CUSUM_CHANGEPOINTS_SQL = f"""

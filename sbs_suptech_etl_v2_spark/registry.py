@@ -5,6 +5,11 @@ Every implemented operator family from SURVEY §2 declares here:
 SQL-expressible, ``ORACLE[name]`` (ANSI SQL for the DuckDB oracle over
 the same parquet tables). Column names/aliases match exactly on both
 sides — the driver hashes values under name-sorted columns.
+
+A query is plain SQL — ``sql_query`` over its ``ORACLE`` text, with no
+DataFrame builder — unless its builder states why not; builders over
+oracle text in DuckDB dialect that Spark does not accept need no such
+statement.
 """
 
 from __future__ import annotations
@@ -13,6 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sbs_suptech_etl_v2_spark.io import sql_query
 from sbs_suptech_etl_v2_spark.operators import blocks as B
 from sbs_suptech_etl_v2_spark.operators import dedup as X1
 from sbs_suptech_etl_v2_spark.operators import extraction as E
@@ -88,11 +94,11 @@ QUERIES: dict[str, QueryFn] = {
     "q108_nucleus_vocab": X4.nucleus_vocab,
     "q114_bm25_retrieval": X4.bm25_retrieval,
     "q117_segment_spend_gini": R.segment_spend_gini,
-    "q49_promo_revenue": R.promo_revenue_share,
+    "q49_promo_revenue": sql_query(R.PROMO_REVENUE_SHARE_SQL),
     "q79_chunk_dedup": X1.chunk_dedup_stats,
     "q84_shingle_containment": X1.shingle_containment,
     "q94_quantity_price_stats": R.quantity_price_stats,
-    "q98_user_snapshot_diff": R.user_snapshot_diff,
+    "q98_user_snapshot_diff": sql_query(R.USER_SNAPSHOT_DIFF_SQL),
     "q100_purchase_nearest_click": R.purchase_nearest_click,
     "q24_topk_cosine": X2.topk_cosine,
     "q25_embedding_neardup": X2.embedding_neardup,
@@ -115,7 +121,7 @@ QUERIES: dict[str, QueryFn] = {
     "q80_pii_redaction": X5.pii_redaction,
     "q81_source_mixture": X5.source_mixture,
     "q82_distribution_windows": R.order_distribution_windows,
-    "q83_nation_presence": R.nation_presence_reconcile,
+    "q83_nation_presence": sql_query(R.NATION_PRESENCE_RECONCILE_SQL),
     "q85_length_histogram": X4.length_histogram,
     "q87_surrogate_keys": R.surrogate_keys,
     "q88_scene_segments": X3.scene_segments,
@@ -138,18 +144,18 @@ QUERIES: dict[str, QueryFn] = {
     # -- beyond the 50-entry prefix ------------------------------------
     # (round-19 lead candidates, numeric order)
     "q01_pricing_summary": R.pricing_summary,
-    "q02_metadata_lookup_join": R.metadata_lookup_join,
-    "q03_top_orders_per_customer": R.top_orders_per_customer,
-    "q04_semi_join_open_orders": R.customers_with_open_orders,
-    "q05_anti_join_no_orders": R.customers_without_orders,
+    "q02_metadata_lookup_join": sql_query(R.METADATA_LOOKUP_JOIN_SQL),
+    "q03_top_orders_per_customer": sql_query(R.TOP_ORDERS_PER_CUSTOMER_SQL),
+    "q04_semi_join_open_orders": sql_query(R.CUSTOMERS_WITH_OPEN_ORDERS_SQL),
+    "q05_anti_join_no_orders": sql_query(R.CUSTOMERS_WITHOUT_ORDERS_SQL),
     "q06_revenue_by_nation": R.revenue_by_nation,
     "q07_branch_union": R.order_branches_union,
-    "q08_priority_rollup": R.order_priority_rollup,
+    "q08_priority_rollup": sql_query(R.ORDER_PRIORITY_ROLLUP_SQL),
     "q09_distinct_agg": R.supplier_distinct_parts,
-    "q10_running_window": R.running_order_totals,
-    "q11_positional_pick": R.positional_pick,
+    "q10_running_window": sql_query(R.RUNNING_ORDER_TOTALS_SQL),
+    "q11_positional_pick": sql_query(R.POSITIONAL_PICK_SQL),
     "q12_set_ops": R.segment_set_ops,
-    "q13_events_tumbling": R.events_tumbling_window,
+    "q13_events_tumbling": sql_query(R.EVENTS_TUMBLING_WINDOW_SQL),
     "q27_token_topk": X4.token_topk,
     "q28_tfidf_top_terms": X4.tfidf_top_terms,
     "q30_doc_fingerprint": X4.doc_fingerprint,
@@ -161,34 +167,34 @@ QUERIES: dict[str, QueryFn] = {
     "q37_artifact_keys": D.artifact_keys,
     "q38_image_features": X3.image_features,
     "q39_frame_sample": X3.frame_sample,
-    "q40_nation_set_ops": R.nation_set_ops,
+    "q40_nation_set_ops": sql_query(R.NATION_SET_OPS_SQL),
     "q42_token_counts": X4.token_counts,
     "q43_notification_ids": J.notification_ids,  # C7 uuid — no_oracle BY DESIGN (rows-only driver row);
     # q78_notification_ids_det is its hash-checked deterministic sibling
     "q44_ocr_extract_pages": E.ocr_extract_pages,
     "q45_events_sliding": R.events_sliding_window,
-    "q46_events_session": R.events_session_window,
+    "q46_events_session": sql_query(R.EVENTS_SESSION_WINDOW_SQL),
     "q48_props_decode": J.props_decode,
     "q51_quantize_embeddings": X2.quantize_embeddings,
-    "q52_status_cube": R.order_status_cube,
-    "q53_approx_distinct": R.segment_distinct_customers,
+    "q52_status_cube": sql_query(R.ORDER_STATUS_CUBE_SQL),
+    "q53_approx_distinct": sql_query(R.SEGMENT_DISTINCT_CUSTOMERS_SQL),
     "q54_purchase_asof_click": R.purchase_asof_click,
     "q55_image_resize": X3.image_resize,
     "q56_audio_features": X3.audio_features,
     "q57_range_frame": R.rolling_spend_range_frame,
-    "q58_salted_agg": R.salted_status_totals,
+    "q58_salted_agg": sql_query(R.SALTED_STATUS_TOTALS_SQL),
     "q59_percentiles": R.priority_price_percentiles,
-    "q60_grouping_sets": R.status_priority_grouping_sets,
+    "q60_grouping_sets": sql_query(R.STATUS_PRIORITY_GROUPING_SETS_SQL),
     "q62_repetition_stats": X5.repetition_stats,
     "q63_lexicon_scrub": X5.lexicon_scrub,
     "q64_stratified_sample": X5.stratified_sample,
     "q65_sequence_packing": X5.sequence_packing,
     "q66_small_qty_revenue": R.small_quantity_brand_revenue,
-    "q67_acctbal_deciles": R.acctbal_deciles,
+    "q67_acctbal_deciles": sql_query(R.ACCTBAL_DECILES_SQL),
     "q68_interval_join": R.click_purchase_interval_join,
-    "q69_status_pivot": R.status_priority_pivot,
-    "q70_brand_argmax": R.top_brand_per_size,
-    "q72_status_unpivot": R.status_counts_unpivot,
+    "q69_status_pivot": sql_query(R.STATUS_PRIORITY_PIVOT_SQL),
+    "q70_brand_argmax": sql_query(R.TOP_BRAND_PER_SIZE_SQL),
+    "q72_status_unpivot": sql_query(R.STATUS_COUNTS_UNPIVOT_SQL),
     "q73_order_calendar": R.order_calendar,
     "q74_edit_distance": X1.variant_edit_distance,
     "q76_session_paths": R.session_event_paths,
@@ -197,18 +203,18 @@ QUERIES: dict[str, QueryFn] = {
     "q95_calendar_resample": R.order_calendar_resample,
     "q97_weighted_sample": X5.weighted_sample,
     "q101_rag_chunking": X5.rag_chunking,
-    "q106_idle_rich_customers": R.idle_rich_customers,
+    "q106_idle_rich_customers": sql_query(R.IDLE_RICH_CUSTOMERS_SQL),
     "q109_activity_history_scd2": R.activity_history_scd2,
     "q110_join_key_skew_profile": R.join_key_skew_profile,
     "q111_supplier_hops_bfs": R.supplier_hops_bfs,
     "q112_decayed_user_score": R.decayed_user_score,
     "q113_cohort_retention": R.cohort_retention,
     "q115_langid_confusion": X4.langid_confusion,
-    "q116_cumulative_distinct": R.cumulative_distinct_users,
+    "q116_cumulative_distinct": sql_query(R.CUMULATIVE_DISTINCT_USERS_SQL),
     "q118_part_pair_baskets": R.part_pair_baskets,
-    "q119_incremental_totals": R.incremental_priority_totals,
-    "q120_monthly_momentum": R.monthly_revenue_momentum,
-    "q121_cusum_changepoints": R.cusum_changepoints,
+    "q119_incremental_totals": sql_query(R.INCREMENTAL_PRIORITY_TOTALS_SQL),
+    "q120_monthly_momentum": sql_query(R.MONTHLY_REVENUE_MOMENTUM_SQL),
+    "q121_cusum_changepoints": sql_query(R.CUSUM_CHANGEPOINTS_SQL),
 }
 
 ORACLE: dict[str, str] = {

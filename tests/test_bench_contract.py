@@ -152,6 +152,10 @@ def test_archive_writes_stable_named_sidecar(tmp_path):
     assert got["n_jobs_by_query"] == {"q01_pricing_summary": 3}
     with open(stamped[0]) as fh_a, open(latest) as fh_b:
         assert fh_a.read() == fh_b.read()
+    # latest.json is replaced atomically: no temp file is left behind
+    assert sorted(_os.listdir(d)) == sorted(
+        [_os.path.basename(stamped[0]), "latest.json"]
+    )
 
 
 def test_no_oracle_side_is_optional():

@@ -9,7 +9,9 @@ pure-Column repetition counters on degenerate texts (empty string,
 single token, NULL, all-duplicate streams). Each compares the Spark
 plan against a per-row Python transcription of the documented
 recursion/semantics, not against the SQL oracle (which could share a
-bug by construction — the round-6 ADVICE lesson on q121).
+bug by construction — the round-6 ADVICE lesson on q121). q116 and
+q121 run their oracle SQL text through Spark, so for those two the
+Python transcriptions here are the only independent check.
 """
 
 from __future__ import annotations
@@ -23,10 +25,7 @@ from collections import Counter
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from sbs_suptech_etl_v2_spark.operators.relational import (
-    CUSUM_THRESHOLD,
-    cusum_changepoints,
-)
+from sbs_suptech_etl_v2_spark.operators.relational import CUSUM_THRESHOLD
 from sbs_suptech_etl_v2_spark.operators.trainprep import (
     MAX_DUP_TOKEN_FRAC,
     MAX_TOP_BIGRAM_FRAC,
@@ -35,6 +34,7 @@ from sbs_suptech_etl_v2_spark.operators.trainprep import (
     repetition_stats,
     weighted_sample,
 )
+from sbs_suptech_etl_v2_spark.registry import QUERIES
 
 EPOCH = dt.datetime(2024, 1, 1)
 
@@ -107,7 +107,7 @@ def test_cusum_matches_recursion_including_positive_first_deviation(
 
     got = {
         (r["user_id"], r["day"]): (r["cusum"], r["is_changepoint"])
-        for r in cusum_changepoints(spark, sf).collect()
+        for r in QUERIES["q121_cusum_changepoints"](spark, sf).collect()
     }
     assert len(got) == sum(len(v) for v in user_days.values())
     for user, vals in user_days.items():
@@ -848,10 +848,6 @@ def test_cohort_retention_matches_transcription(spark, tmp_path):
 
 
 def test_cumulative_distinct_matches_naive_set_union(spark, tmp_path):
-    from sbs_suptech_etl_v2_spark.operators.relational import (
-        cumulative_distinct_users,
-    )
-
     rng = random.Random(17)
     rows = []
     eid = 0
@@ -892,7 +888,7 @@ def test_cumulative_distinct_matches_naive_set_union(spark, tmp_path):
 
     got = {
         (r["event_type"], r["day"]): (r["new_users"], r["cumulative_users"])
-        for r in cumulative_distinct_users(spark, sf).collect()
+        for r in QUERIES["q116_cumulative_distinct"](spark, sf).collect()
     }
     assert got == expect
     # the planted flat-day case actually occurred (otherwise the test
