@@ -1489,8 +1489,8 @@ def quantity_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double cast keeps the unscaled value below 2^53 (the division
     # result's scale-6 type would put sxy's unscaled at ~2.7e17, where
     # decimal->double conversion differs in the last ulp between
-    # engines — the _exact_double trap), making the final double the
-    # same correctly-rounded value the one-level decimal form produced.
+    # engines), making the final double the same correctly-rounded
+    # value the one-level decimal form produced.
     def _cents(col: str):
         return (F.col(col) / 100).cast("decimal(28,2)").cast("double")
 
@@ -2651,18 +2651,6 @@ FROM dense
 """
 
 
-def _exact_double(dec) -> Column:
-    """Correctly-rounded DECIMAL→DOUBLE via the string parser.
-
-    Direct decimal→double casts disagree between the engines in the
-    last ulp once the unscaled value passes 2^53 (two-step scaled
-    conversions); both engines' string→double parsers are
-    correctly-rounded IEEE, so routing exact decimals through VARCHAR
-    is engine-identical at ANY magnitude.
-    """
-    return dec.cast("string").cast("double")
-
-
 def segment_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of customer spend per market segment — the
     inequality statistic behind data-mix and revenue-concentration
@@ -2673,11 +2661,11 @@ def segment_spend_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend sums as DECIMAL, then converts to EXACT INTEGER cents×100.
     The rank products are widened to DECIMAL(38,0) BEFORE multiplying
     (the per-term product alone passes int64 around sf10), their sums
-    stay exact to 1e38, and the final narrowing routes through
-    ``_exact_double`` (string→double): direct decimal→double casts
-    disagree between the engines in the last ulp above 2^53 (observed
-    at sf0.1 in the first decimal version of this query), but both
-    string parsers are correctly-rounded IEEE. One customer-keyed
+    stay exact to 1e38, and the final narrowing casts
+    decimal→string→double: direct decimal→double casts disagree
+    between the engines in the last ulp above 2^53 (observed at sf0.1
+    in the first decimal version of this query), but both string
+    parsers are correctly-rounded IEEE. One customer-keyed
     aggregate, one segment sort (the segment count bounds window
     width), one segment rollup.
     """

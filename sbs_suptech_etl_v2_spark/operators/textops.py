@@ -808,7 +808,8 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition layout, so a bare SUM(double) could flip the 6-decimal
     # rounding (and the top-k cut) between runs — quantizing each term
     # once makes the sum order-free (the q94 discipline); the narrowing
-    # back to double routes through the string parser (_exact_double).
+    # back to double casts decimal->string->double, whose correctly
+    # rounded string parser agrees between the engines at any magnitude.
     # TIE ASSUMPTION (r07 advisor): the double->decimal(28,12) cast is
     # HALF_UP from the double's EXACT decimal expansion in Spark, and
     # DuckDB's CAST rounds the same expansion — they could only differ if a
