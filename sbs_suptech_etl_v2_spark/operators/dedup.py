@@ -73,61 +73,32 @@ def _words(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def _let(bound: Column, body) -> Column:
-    """Let-binding idiom: evaluate ``bound`` ONCE per row, pass it to
-    ``body`` as a lambda variable.
+# --- expression helpers (Spark SQL text) -------------------------------
+# Builders compose these into one selectExpr, so a whole projection
+# parses JVM-side in a single py4j round trip instead of one trip per
+# Column node (keeps the driver out of per-expression work).
+# Let-binding idiom: ``get(transform(array(e), x -> body(x)), 0)``
+# evaluates ``e`` ONCE per row and hands it to ``body`` as a lambda
+# variable — without it, CollapseProject inlines an intermediate column
+# expression into every use site (16× md5 recompute for the minhash
+# signature).
 
-    ``transform(array(e), x -> body(x))[0]`` materializes ``e`` a single
-    time even when ``body`` references it many times — without this,
-    CollapseProject inlines an intermediate column expression into every
-    use site (16× md5 recompute for the minhash signature).
-    """
-    return F.get(F.transform(F.array(bound), body), 0)
 
-
-def _hash32(col: Column) -> Column:
+def _hash32_sql(expr: str) -> str:
     """Portable 32-bit string hash: first 8 hex chars of md5 as BIGINT."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+    return f"cast(conv(substring(md5({expr}), 1, 8), 16, 10) as bigint)"
 
 
-def _shingle_hashes(text: Column) -> Column:
+def _shingle_hashes_sql(expr: str) -> str:
     """Distinct k-shingle hashes via token-hash composition.
 
     One md5 per TOKEN (not per shingle string), then the 3-gram hash is
     the polynomial composition ``((h1·31 + h2)·31 + h3) mod p`` — ~3×
     less hash input than hashing shingle strings, same item-set
     semantics (collisions are engine-identical so oracle parity holds).
-    All arithmetic stays < 2^41, exact in BIGINT both engines.
+    All arithmetic stays < 2^41, exact in BIGINT both engines. The
+    token-hash array is let-bound (see above).
     """
-    return _let(
-        F.transform(_words(text), lambda w: _hash32(w) % MERSENNE_P),
-        lambda hs: F.when(
-            F.size(hs) >= SHINGLE_K,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(hs) - SHINGLE_K),
-                    lambda i: ((hs[i] * 31 + hs[i + 1]) * 31 + hs[i + 2]) % MERSENNE_P,
-                )
-            ),
-        ).otherwise(F.array(_hash32(text) % MERSENNE_P)),
-    )
-
-
-# --- Spark-SQL-text twins of the expression helpers above ---------------
-# Hot builders compose these into one selectExpr so the whole projection
-# parses JVM-side in a single py4j round trip instead of one trip per
-# Column node (guide §5 — keep the driver out of per-expression work).
-# Twins mirror the Column forms token for token; the committed
-# plans/r17 explain pairs pin the resolved plans as identical.
-
-
-def _hash32_sql(expr: str) -> str:
-    """SQL-text twin of ``_hash32``."""
-    return f"cast(conv(substring(md5({expr}), 1, 8), 16, 10) as bigint)"
-
-
-def _shingle_hashes_sql(expr: str) -> str:
-    """SQL-text twin of ``_shingle_hashes`` (same _let idiom)."""
     P = MERSENNE_P
     return (
         f"get(transform(array(transform(split({expr}, ' '),"
@@ -163,7 +134,7 @@ def _minhash_signatures(corpus: DataFrame) -> DataFrame:
     ``((h1·31+h2)·31+h3) mod p`` (windows masked at document
     boundaries), same affine ``(a·h+b) mod p`` minima (products stay
     < 2^62, exact in int64). Docs with < {SHINGLE_K} words fall back to
-    the whole-text hash, mirroring ``_shingle_hashes``'s ELSE branch.
+    the whole-text hash, mirroring ``_shingle_hashes_sql``'s ELSE branch.
     Distinctness of shingles is irrelevant under min, so the kernel
     skips the ``array_distinct`` the per-row jaccard verifier needs.
     Plan: one scan → MapInPandas, no shuffle.
@@ -235,7 +206,7 @@ def _shingle_sets(corpus: DataFrame) -> DataFrame:
     """(doc_id, hashes array<bigint>) — DISTINCT k-shingle hashes per
     corpus row, as an Arrow-batched ``mapInPandas`` NumPy kernel.
 
-    The vectorized twin of the ``_shingle_hashes`` expression (same
+    The vectorized twin of the ``_shingle_hashes_sql`` expression (same
     md5-derived token hashes, same ``((h1·31+h2)·31+h3) mod p``
     composition, same whole-text fallback for short docs) for consumers
     that need the shingle SET itself rather than a minhash of it — the
@@ -316,7 +287,7 @@ corpus AS (
 
 _SQL_HASH32 = "CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
 
-# token-hash-composed shingle hashes (mirror of _shingle_hashes)
+# token-hash-composed shingle hashes (mirror of _shingle_hashes_sql)
 _ORACLE_SHINGLE_HASHES = f"""
 shingle_hashed AS (
   SELECT doc_id,

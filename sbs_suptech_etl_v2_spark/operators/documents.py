@@ -66,7 +66,7 @@ def scalar_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inputs are synthesized per doc_id: a free-text sentence that may or
     may not embed a dd/mm/yyyy date, a month string (valid Spanish /
     garbage / NULL), and a year string (valid / padded / split / alpha /
-    NULL). All refinements are pure Column expressions — no UDFs.
+    NULL). All refinements are built-in SQL expressions — no UDFs.
     """
     # SQL-text form (two selectExprs instead of ~150 py4j round trips
     # of Column algebra — guide §5 driver-work note; analyzed plan is

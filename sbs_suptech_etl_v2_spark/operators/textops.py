@@ -37,7 +37,6 @@ from sbs_suptech_etl_v2_spark.functions.scalars import sql_quote_literal
 from sbs_suptech_etl_v2_spark.io import spread, table
 from sbs_suptech_etl_v2_spark.operators.dedup import (
     _ORACLE_SHINGLE_HASHES,
-    _hash32,
     _shingle_hashes_sql,
     _words,
 )

@@ -32,7 +32,7 @@ alongside dedup/similarity/textops):
 
 All ratios divide exact integers (IEEE-identical in both engines); all
 hashes are the portable md5-derived 32-bit hash shared with the dedup
-family (`dedup._hash32`).
+family (`dedup._hash32_sql`).
 """
 
 from __future__ import annotations
@@ -42,11 +42,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.checkpointing import materialize
+from sbs_suptech_etl_v2_spark.functions.scalars import sql_quote_literal
 from sbs_suptech_etl_v2_spark.io import table
 from sbs_suptech_etl_v2_spark.operators.dedup import (
     _ORACLE_SHINGLE_HASHES,
     _SQL_HASH32,
-    _hash32,
+    _hash32_sql,
     _shingle_sets,
     _words,
 )
@@ -74,6 +75,12 @@ _SAMPLE_SALT = "strat:"
 PACK_TOKENS = 512  # target tokens per pack
 PACK_SHARDS = 4  # deterministic shards per language
 _PACK_SALT = "pack:"
+
+
+def _salted_hash_sql(salt: str) -> str:
+    """md5-derived 32-bit hash of ``salt || doc_id`` as SQL text — the
+    row-local bucket device of q64, q65 and q81."""
+    return _hash32_sql(f"concat('{sql_quote_literal(salt)}', cast(doc_id as string))")
 
 
 def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,9 +377,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.create_map(*[F.lit(x) for kv in SAMPLE_RATES.items() for x in kv]),
         F.col("lang"),
     )
-    bucket = (
-        _hash32(F.concat(F.lit(_SAMPLE_SALT), F.col("doc_id").cast("string"))) % 100
-    )
+    bucket = F.expr(f"{_salted_hash_sql(_SAMPLE_SALT)} % 100")
     return (
         docs.select("doc_id", "lang", bucket.alias("bucket"))
         .where(F.col("bucket") < rate)
@@ -409,10 +414,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     tokens = F.size(_words(F.col("text"))).cast("bigint")
-    shard = (
-        _hash32(F.concat(F.lit(_PACK_SALT), F.col("doc_id").cast("string")))
-        % PACK_SHARDS
-    )
+    shard = F.expr(f"{_salted_hash_sql(_PACK_SALT)} % {PACK_SHARDS}")
     w = (
         W.partitionBy("lang", "shard")
         .orderBy("doc_id")
@@ -571,9 +573,7 @@ def source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(0),
     )
-    bucket = (
-        _hash32(F.concat(F.lit(_MIX_SALT), F.col("doc_id").cast("string"))) % 100
-    )
+    bucket = F.expr(f"{_salted_hash_sql(_MIX_SALT)} % 100")
     kept = bucket < weight
     return (
         docs.groupBy("lang", "source")
@@ -632,7 +632,8 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     a rank flip would need two keys within one double ulp).
     """
     docs = table(spark, sf_dir, "documents")
-    u = (_hash32(F.col("doc_id").cast("string")) + 1) / F.lit(4294967297.0)
+    # the D suffix keeps the divisor DOUBLE (a bare literal is DECIMAL)
+    u = F.expr(f"({_hash32_sql('cast(doc_id as string)')} + 1) / 4294967297.0D")
     key = F.log(u) / F.col("n_chars")
     w = W.partitionBy("lang").orderBy(F.desc("sample_key"), "doc_id")
     return (
@@ -702,7 +703,7 @@ def rag_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("chunk_tokens"),
     )
-    return chunks.withColumn("chunk_hash", _hash32(F.col("chunk_text")))
+    return chunks.withColumn("chunk_hash", F.expr(_hash32_sql("chunk_text")))
 
 
 RAG_CHUNKING_SQL = f"""

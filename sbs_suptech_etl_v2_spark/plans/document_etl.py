@@ -7,18 +7,19 @@ Extract→Transform→Load→Final pipeline (workflow_base.py:44-55). Here
 the whole thing is ONE declarative plan over a requests DataFrame, run
 as one pass per batch:
 
-1. **extract + route (S4/W1 + A1)** — one select over every request
-   decodes the payload and computes the ``flow`` column: REGISTRATION →
+1. **extract + route (S4/W1 + A1 + C2/C3)** — one select over every
+   request decodes the payload, refines the period month/year and
+   computes the ``flow`` column: REGISTRATION →
    inscripciones, APPRAISAL → tasaciones, everything else → pólizas
    (the reference's default fall-through, workflow_orchestator.py:61-71).
    The truncated first-pages concat goes to ``document_content_total``
    and the FULL text to ``document_content_llm`` — the reference's
    observed (swapped-looking) behavior **[B]**, reproduced deliberately
    (textract_extractor_document.py:58-68).
-2. **transform (A2-A4 + C1-C3)** — per domain, the LLM port via
+2. **transform (A2-A4)** — per domain, the LLM port via
    Arrow-batched ``mapInPandas`` over that flow's extracted rows; the
    request columns ride through the port as key columns, so no join
-   reattaches them. Period month/year refined.
+   reattaches them.
 3. **load (K1/K2 + F8)** — the three domains' rows reunite with
    ``unionByName`` (each domain's fields are NULL on the others' rows)
    and feed ONE text-artifact write and ONE metadata merge; content
@@ -42,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.checkpointing import materialize
-from sbs_suptech_etl_v2_spark.functions.scalars import refine_month, refine_year
+from sbs_suptech_etl_v2_spark.functions.scalars import refine_month_sql, refine_year_sql
 from sbs_suptech_etl_v2_spark.operators.documents import (
     FIRST_PAGES,
     NOTIFICATION_TYPE,
@@ -86,8 +87,9 @@ EXTRACTED_COLS = [
 
 
 def _extract(requests: DataFrame) -> DataFrame:
-    """S4/W1 + A1 — decoded content, first-pages vs full split, success
-    flag, and the routed flow (the reference's default fall-through)."""
+    """S4/W1 + A1 + C2/C3 — decoded content, first-pages vs full split,
+    success flag, the routed flow (the reference's default
+    fall-through) and the refined period month/year."""
     text = F.decode(F.col("content"), "utf-8")
     words = F.split(text, " ")
     n_pages = F.ceil(F.size(words) / F.lit(PAGE_WORDS)).cast("int")
@@ -110,8 +112,8 @@ def _extract(requests: DataFrame) -> DataFrame:
         "parent_id",
         "session_id",
         "document_type",
-        "period_month",
-        "period_year",
+        F.expr(refine_month_sql("period_month")).alias("period_month"),
+        F.expr(refine_year_sql("period_year")).alias("period_year"),
         flow.alias("flow"),
         # [B] reproduced: truncated text -> _total, full text -> _llm
         first_pages.alias("document_content_total"),
@@ -123,23 +125,16 @@ def _extract(requests: DataFrame) -> DataFrame:
 def _transform(
     extracted: DataFrame, flow: str, port_method: str, fields: str, port_factory=None
 ) -> DataFrame:
-    """A2-A4 + C2/C3 — one domain's port extraction (F4-gated) + period
-    refinement; the carried request columns pass through the port."""
+    """A2-A4 — one domain's port extraction (F4-gated); the carried
+    request columns, refined periods included, pass through the port."""
     gated = extracted.filter((F.col("flow") == flow) & F.col("extract_success"))
-    return (
-        extract_structured(
-            gated.select(
-                *CARRIED_COLS, F.col("document_content_llm").alias("content")
-            ),
-            port_method,
-            f"{CARRIED_SCHEMA}, {fields}",
-            key_cols=CARRIED_COLS,
-            port_factory=port_factory,
-        )
-        .withColumn("period_month", refine_month(F.col("period_month")))
-        .withColumn("period_year", refine_year(F.col("period_year")))
-        .withColumn("transform_success", F.lit(True))
-    )
+    return extract_structured(
+        gated.select(*CARRIED_COLS, F.col("document_content_llm").alias("content")),
+        port_method,
+        f"{CARRIED_SCHEMA}, {fields}",
+        key_cols=CARRIED_COLS,
+        port_factory=port_factory,
+    ).withColumn("transform_success", F.lit(True))
 
 
 def _metadata_map(transformed: DataFrame) -> DataFrame:

@@ -40,8 +40,8 @@ from pyspark.sql import functions as F
 
 from sbs_suptech_etl_v2_spark.functions.scalars import (
     format_text_key,
-    map_merge_new_wins,
-    stringify_map_values,
+    map_merge_new_wins_sql,
+    stringify_map_values_sql,
 )
 
 SQS_BATCH_MAX = 10
@@ -84,12 +84,7 @@ def _atomic_swap(spark: SparkSession, df: DataFrame, table_path: str) -> None:
     os.rename(tmp, table_path)
 
 
-def merge_metadata(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    strategy: str = "parquet_swap",
-) -> None:
+def merge_metadata(spark: SparkSession, table_path: str, updates: DataFrame) -> None:
     """K2 — MERGE-style metadata upsert with map merge, new wins.
 
     ``updates``: ``(record_id string, metadata map<string,string>)``.
@@ -98,8 +93,8 @@ def merge_metadata(
     after stringify-all (C10). The join is a full outer on record_id —
     at scale both sides shuffle once on the merge key.
 
-    ``strategy``: ``parquet_swap`` is the CANONICAL (and only) form —
-    write-to-temp + directory rename. The reference's DynamoDB
+    The merged table replaces the old one by write-to-temp + directory
+    rename (``_atomic_swap``). The reference's DynamoDB
     ``update_item`` loop is per-item atomic; the set-oriented swap
     yields the same observable state transition (every matched row
     merged, every unmatched row inserted) in one commit, atomic
@@ -121,13 +116,8 @@ def merge_metadata(
     lives outside this repo (the package is unavailable here and a
     shipped-but-unrunnable path would be a stub).
     """
-    if strategy != "parquet_swap":
-        raise ValueError(
-            f"unknown merge strategy {strategy!r}; parquet_swap is the "
-            "canonical K2 merge (see docstring)"
-        )
-    new = updates.select(
-        F.col("record_id"), stringify_map_values(F.col("metadata")).alias("new_meta")
+    new = updates.selectExpr(
+        "record_id", f"{stringify_map_values_sql('metadata')} AS new_meta"
     )
     if os.path.exists(table_path):
         existing = spark.read.parquet(table_path)
@@ -138,9 +128,8 @@ def merge_metadata(
     merged = (
         existing.withColumnRenamed("metadata", "old_meta")
         .join(new, "record_id", "full_outer")
-        .select(
-            "record_id",
-            map_merge_new_wins(F.col("old_meta"), F.col("new_meta")).alias("metadata"),
+        .selectExpr(
+            "record_id", f"{map_merge_new_wins_sql('old_meta', 'new_meta')} AS metadata"
         )
     )
     _atomic_swap(spark, merged, table_path)

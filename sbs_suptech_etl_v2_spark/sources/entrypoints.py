@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sbs_suptech_etl_v2_spark.functions.scalars import refine_month, refine_year
+from sbs_suptech_etl_v2_spark.functions.scalars import refine_month_sql, refine_year_sql
 from sbs_suptech_etl_v2_spark.operators.jsonops import REQUEST_SCHEMA
 from sbs_suptech_etl_v2_spark.streaming.ingress import SNAKE_CASE
 
@@ -93,11 +93,14 @@ def listing_scan(
         rel.alias("key"),
         F.lit(prefix).alias("prefix"),
         F.get(parts, F.size(parts) - 1).alias("basename"),
-        refine_month(month_tok).alias("period_month"),
-        refine_year(year_tok).alias("period_year"),
+        month_tok.alias("period_month"),
+        year_tok.alias("period_year"),
         F.col("length").alias("content_length"),
         F.col("content"),
-    )
+    ).withColumns({
+        "period_month": F.expr(refine_month_sql("period_month")),
+        "period_year": F.expr(refine_year_sql("period_year")),
+    })
     if position is not None:
         picked = listed.orderBy("key").limit(position + 1).orderBy(F.col("key").desc()).limit(1)
         return picked

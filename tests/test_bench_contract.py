@@ -377,14 +377,18 @@ def test_driver_records_clear_the_settled_alarm():
                 if a != b
             }
             wobble_only = all(
-                (n in AQE_WOBBLE_QUERIES and abs(a - b) <= 1)
-                or (
-                    # a documented restructure reading its EXPECTED
-                    # count is the current tree's plan, not drift —
-                    # the promoted record's map is simply stale there
-                    n in RESTRUCTURED_EXPECTED_JOBS
-                    and a == RESTRUCTURED_EXPECTED_JOBS[n]
+                (
+                    # a documented restructure is judged against its
+                    # EXPECTED count only — the promoted record's map is
+                    # stale there, so a reading within ±1 of the stale
+                    # value (the old plan's eager job regressing back
+                    # in) must not be absolved; the wobble pair keeps
+                    # its ±1, around the expected count
+                    abs(a - RESTRUCTURED_EXPECTED_JOBS[n])
+                    <= (1 if n in AQE_WOBBLE_QUERIES else 0)
                 )
+                if n in RESTRUCTURED_EXPECTED_JOBS
+                else (n in AQE_WOBBLE_QUERIES and abs(a - b) <= 1)
                 for n, (a, b) in diffs.items()
             )
             if wobble_only:

@@ -256,6 +256,34 @@ def test_one_call_per_sink_and_exact_metadata(spark, tmp_path, monkeypatch):
     }
 
 
+def test_invalid_periods_refine_to_absent_metadata(spark, tmp_path):
+    """C2/C3 in the plan: an unknown month and a non-4-digit year refine
+    to NULL, so every domain's lake row drops both period keys, while a
+    valid period beside them refines to "5"/"2023"."""
+    texts = {
+        "POLICY": _polizas_text,
+        "REGISTRATION": _inscripciones_text,
+        "APPRAISAL": _tasaciones_text,
+    }
+    rows = [
+        (f"bad_{i}", "p", "k", "s", dtype, "Birmingham", "20 23", texts[dtype](i).encode())
+        for i, dtype in enumerate(texts)
+    ]
+    rows.append(("good", "p", "k", "s", "POLICY", " Mayo ", "2023", _polizas_text(9).encode()))
+    notifier = NotificationBatchWriter()
+    run_document_etl(
+        spark, spark.createDataFrame(rows, REQUEST_SCHEMA), str(tmp_path / "lake"), notifier
+    )
+    _, meta, sent = _lake_state(spark, tmp_path, notifier)
+    assert sorted(meta) == ["bad_0", "bad_1", "bad_2", "good"]
+    for rid in ("bad_0", "bad_1", "bad_2"):
+        assert "period_month" not in meta[rid] and "period_year" not in meta[rid], meta[rid]
+        assert meta[rid]["document_type"] in texts
+    assert meta["good"]["period_month"] == "5"
+    assert meta["good"]["period_year"] == "2023"
+    assert sent == ["bad_0", "bad_1", "bad_2", "good"]
+
+
 @pytest.mark.parametrize(
     "dtype,flow,text",
     [
